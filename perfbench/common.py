@@ -1,10 +1,9 @@
-"""Helpers shared by the workloads: session start and stop, memory, host
-speed, metric units."""
+"""Helpers shared by the workloads: session start and stop, memory, metric
+units."""
 
 from __future__ import annotations
 
 import os
-import time
 
 
 def start_session():
@@ -27,84 +26,51 @@ def stop_session(spark) -> None:
     proc.wait(timeout=60)
 
 
-def retained_mb(spark) -> float:
-    """Memory the driver holds after the timed phase: the JVM heap still in
-    use after a full garbage collection (Spark's cached blocks live there)
-    plus this Python process's resident set.  ``spark`` may be None for a
-    workload that starts no session."""
-    heap = 0
-    if spark is not None:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.System.gc()
-        rt = jvm.java.lang.Runtime.getRuntime()
-        heap = rt.totalMemory() - rt.freeMemory()
+def retained_mb(spark) -> dict[str, float]:
+    """Memory the driver holds after the timed phase, in MB: ``cached``, the
+    blocks Spark keeps for cached DataFrames (memory and disk), and ``rss``,
+    this Python process's resident set (the dashboard's result cache lives
+    there).  Both repeat from run to run, unlike the JVM heap in use, which
+    depends on when the collector last ran."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    cached = sum(i.memSize() + i.diskSize() for i in infos)
     with open("/proc/self/statm") as f:
-        rss_pages = int(f.read().split()[1])
-    return (heap + rss_pages * os.sysconf("SC_PAGE_SIZE")) / 2**20
-
-
-# calibration_s() on the reference host (4-core VM, quiet phase).
-CALIBRATION_REF_S = 0.060
-
-
-def calibration_s() -> float:
-    """Time a fixed piece of pure-Python work shaped like the program's
-    driver-side work (string formatting, allocation, dict updates).
-
-    On a shared 4-core VM the host's speed drifted by up to 60 % within a
-    minute, in a process's CPU time as much as in its wall time; timing this probe next to each
-    operation lets a run express its latencies at the reference host speed
-    (``latency * CALIBRATION_REF_S / probe``), the same division for every
-    commit."""
-    t = time.perf_counter()
-    parts = [f'<c r="A{i}" s="{i % 7}"><v>{i * 1.5!r}</v></c>'
-             for i in range(60_000)]
-    index = {}
-    for i, p in enumerate(parts):
-        index[p[:12]] = i
-    "".join(parts)
-    return time.perf_counter() - t
-
-
-class SpeedProbe:
-    """Host speed next to each operation: ``step()`` probes and returns the
-    speed factor (reference probe time / mean of this probe and the
-    previous one) for the operation between the two.  ``spent_s`` is the
-    time spent probing."""
-
-    def __init__(self) -> None:
-        self._last = self.spent_s = calibration_s()
-
-    def step(self) -> float:
-        probe = calibration_s()
-        self.spent_s += probe
-        factor = 2 * CALIBRATION_REF_S / (self._last + probe)
-        self._last = probe
-        return factor
+        rss = int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+    return {"cached": cached / 2**20, "rss": rss / 2**20}
 
 
 def metric(value: float, unit: str) -> dict:
     return {"value": value, "unit": unit}
 
 
-# Per-layer metrics of a traced run, with their units.
+QUERY_MODULES = ("core", "tpch", "extras", "events", "text", "corpus",
+                 "vector", "media", "cxc")
+
+# Per-layer metrics of a traced run, with their units.  ``<span>.spark_jobs``
+# and ``<span>.spark_stages`` count the Spark jobs and stages launched while
+# the span was open.
+_COUNTED_SPANS = (["pipeline.run_pipeline", "sinks.dashboard.request",
+                   "sinks.report.export_views", "sinks.pdf.export_pdf_report"]
+                  + [f"queries.{m}" for m in QUERY_MODULES])
 LAYER_UNITS = {
     "session.get_spark_s": "s",
     "pipeline.run_pipeline_s": "s",
-    "pipeline.run_pipeline.spark_jobs": "count",
-    "pipeline.run_pipeline.spark_stages": "count",
     **{f"sinks.dashboard.page_{p}_p50_ms": "ms"
        for p in ("resumen", "cartera", "clientes", "kpis", "auditoria")},
-    "sinks.dashboard.request.spark_jobs": "count",
-    "sinks.dashboard.request.spark_stages": "count",
     "sinks.dashboard.jobs_per_request": "ratio",
     "sinks.dashboard.cache_hit_ratio": "ratio",
     "sinks.dashboard.html_bytes": "bytes",
     "sinks.report.export_views_s": "s",
-    "sinks.report.export_views_self_s": "s",
+    "sinks.report.jobs_per_view": "ratio",
     "sinks.report.bytes_written": "bytes",
     "sinks.xlsx.write_styled_workbook_s": "s",
+    "sinks.pdf.export_pdf_report_s": "s",
+    **{f"queries.{m}_s": "s" for m in QUERY_MODULES},
+    **{f"{s}.{c}": "count" for s in _COUNTED_SPANS
+       for c in ("spark_jobs", "spark_stages")},
     "trace.wall_s": "s",
-    "trace.top_spans_s": "s",
+    "trace.untraced_wall_s": "s",
     "trace.overhead_s": "s",
+    "trace.top_spans_s": "s",
+    "trace.unaccounted_s": "s",
 }

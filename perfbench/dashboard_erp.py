@@ -1,19 +1,24 @@
-"""Workload ``dashboard_erp``: one analyst browsing the CxC dashboard.
+"""Workload ``dashboard_erp``: one analyst browsing the CxC dashboard and
+exporting the report.
 
 Set-up builds the views with ``pipeline.run_pipeline``, starts
 ``sinks.dashboard.serve_dashboard`` on an ephemeral localhost port and
-requests each of the five pages once without filters.  The timed phase is a
-closed loop with one client: it sends the next HTTP request only after the
-previous response has been read, in whole cycles until ``seconds`` have
+requests the landing page without filters.  The timed phase is a
+closed loop with one client: it starts the next operation only after the
+previous one has finished, in whole cycles (passes) until ``seconds`` have
 elapsed.
 
 A cycle requests each page once with new filters, repeats one of those
 (page, filters) pairs, which the dashboard's result cache answers without a
-Spark job, and ends with ``/refresh``, which empties the cache.  Each page
-always gets the same filter kinds (cliente, vendedor, buscar, mora,
-solo_saldo, alone or in pairs); the seed draws their values from the
-views' distinct values, read from the filter form of the unfiltered pages,
-and the pair each cycle repeats.
+Spark job, exports the report on ``REPORT_VIEWS`` (``sinks.report.export_views``
+writing the workbooks with ``sinks.xlsx``, then
+``sinks.pdf.export_pdf_report``) into a fresh directory, and ends with
+``/refresh``, which empties the cache.  Each page always gets the same
+filter kinds (cliente, vendedor, buscar, mora, solo_saldo, alone or in
+pairs); the seed draws their values from the views' distinct values, read
+from the filter form of the landing page, and the pair each cycle
+repeats.  The export runs in the client's process on the same views the
+dashboard serves, unfiltered, so it is the same work in every cycle.
 
 One client only: ``Dashboard.render`` keeps each request's filters on the
 shared instance and ``ThreadingHTTPServer`` serves requests on concurrent
@@ -26,19 +31,40 @@ from __future__ import annotations
 import hashlib
 import html
 import http.client
+import json
+import os
 import random
 import re
 import statistics
 import sys
 import time
 import urllib.parse
+import zipfile
 
-from common import SpeedProbe, retained_mb, start_session
+from tracing import span
 
+import prac_data_pipelines_spark.sinks.report as report
 from prac_data_pipelines_spark.pipeline import run_pipeline
 from prac_data_pipelines_spark.sinks.dashboard import PAGES, serve_dashboard
+from prac_data_pipelines_spark.sinks.pdf import export_pdf_report
 
+HERE = os.path.dirname(os.path.abspath(__file__))
 PAGE_NAMES = [p for p, _ in PAGES]
+# The page the analyst opens first, in set-up; its filter form lists the
+# filter values the cycles draw from.
+LANDING_PAGE = "resumen"
+# Views the cycle's report export writes: the KPI summary and the ABC
+# concentration, aging and overdue-versus-current portfolio views the
+# dashboard's pages show (sheets of 02_analisis_cxc.xlsx; a PDF page of each
+# chart kind), and the audit list of active rows without a salesperson
+# (00_auditoria_cxc.xlsx, the export's row-heavy sheet; a PDF table page).
+REPORT_VIEWS = ("kpis_resumen", "kpis_concentracion_mxn",
+                "antiguedad_cartera_mxn", "cartera_vencida_vs_vigente_mxn",
+                "sin_vendedor")
+PDF_NAME = "cxc_dashboard.pdf"
+# The report manifest (file, sheet names and row counts, PDF pages) the
+# seed code writes from the generated tables.
+EXPECTED_REPORT = os.path.join(HERE, "expected", "dashboard_report.json")
 VENDEDORES = [f"VEND-{i}" for i in range(5)]
 # Filter kinds each page gets in every cycle, so that every cycle (and so
 # every run, whether one or more cycles fit in it) has the same make-up.
@@ -97,12 +123,13 @@ def _filters(rng: random.Random, kinds: tuple[str, ...], clientes: list[str],
 
 def request_cycle(rng: random.Random, clientes: list[str],
                   moras: list[str]) -> list[tuple[str, dict | None]]:
-    """One cycle of requests: each page once with new filters of the kinds
-    ``FILTER_KINDS`` gives it, a repeat of one of them, then ``/refresh``.
-    The seed draws the filter values and the repeated pair."""
+    """One cycle of operations: each page once with new filters of the kinds
+    ``FILTER_KINDS`` gives it, a repeat of one of them, the report export,
+    then ``/refresh``.  The seed draws the filter values and the repeated
+    pair."""
     new = [(page, _filters(rng, FILTER_KINDS[page], clientes, moras))
            for page in PAGE_NAMES]
-    return new + [rng.choice(new), ("refresh", None)]
+    return new + [rng.choice(new), ("report", None), ("refresh", None)]
 
 
 def _form_state(body: str) -> dict:
@@ -138,16 +165,99 @@ def echo_errors(filters: dict[str, list[str]], body: str) -> list[str]:
             for k, v in want.items() if got.get(k) != v]
 
 
-def check(log: list[dict]) -> int:
-    """Count failed requests: wrong status, a filter form that does not echo
-    the request's own filters, or a repeated request whose HTML differs."""
+def report_manifest(out_dir: str) -> dict:
+    """file -> [[sheet, data rows], ...] read back from each workbook, and
+    the PDF's page count."""
+    manifest: dict = {}
+    for fname in sorted(os.listdir(out_dir)):
+        path = os.path.join(out_dir, fname)
+        if fname.endswith(".pdf"):
+            with open(path, "rb") as f:
+                manifest[fname] = f.read().count(b"/Type /Page /Parent")
+            continue
+        with zipfile.ZipFile(path) as zf:
+            book = zf.read("xl/workbook.xml").decode()
+            manifest[fname] = [
+                [html.unescape(name),
+                 zf.read(f"xl/worksheets/sheet{i}.xml").decode().count("<row ") - 1]
+                for i, name in enumerate(
+                    re.findall(r'<sheet name="([^"]*)"', book), 1)]
+    return manifest
+
+
+def setup(spark, data_dir: str, out_dir: str, tracer) -> dict:
+    with span(tracer, "pipeline.run_pipeline"):
+        views = run_pipeline(spark, data_dir)
+    server, port = serve_dashboard(views, 0)
+    status, body = _get(port, f"/{LANDING_PAGE}")
+    if status != 200:
+        close({"server": server})
+        raise RuntimeError(f"set-up request /{LANDING_PAGE} returned {status}")
+    clientes, moras = filter_domains([body.decode()])
+    return {"server": server, "port": port, "clientes": clientes,
+            "moras": moras, "out_dir": out_dir, "exports": 0,
+            "report_views": {n: views[n] for n in REPORT_VIEWS}}
+
+
+def close(state: dict) -> None:
+    state["server"].shutdown()
+    state["server"].server_close()
+
+
+def _export(state: dict, tracer) -> str:
+    out = os.path.join(state["out_dir"], f"report{state['exports']}")
+    state["exports"] += 1
+    write = report.write_styled_workbook
+    if tracer is not None:
+        report.write_styled_workbook = tracer.wrap(
+            "sinks.xlsx.write_styled_workbook", write)
+    try:
+        with span(tracer, "sinks.report.export_views"):
+            report.export_views(state["report_views"], out)
+    finally:
+        report.write_styled_workbook = write
+    with span(tracer, "sinks.pdf.export_pdf_report"):
+        export_pdf_report(state["report_views"], os.path.join(out, PDF_NAME))
+    return out
+
+
+def one_pass(state: dict, rng: random.Random, tracer, log: list[dict]) -> None:
+    for page, filters in request_cycle(rng, state["clientes"], state["moras"]):
+        entry = {"op": page, "page": page, "filters": filters}
+        t = time.perf_counter()
+        try:
+            if page == "report":
+                entry["dir"] = _export(state, tracer)
+            else:
+                entry["path"] = ("/refresh" if page == "refresh"
+                                 else _path(page, filters))
+                with span(tracer, "sinks.dashboard.request", page=page):
+                    entry["status"], entry["body"] = _get(state["port"],
+                                                          entry["path"])
+        except Exception as e:  # noqa: BLE001 - a failed operation is counted
+            entry["error"] = f"{page}: {e!r}"
+        entry["ms"] = (time.perf_counter() - t) * 1000.0
+        log.append(entry)
+
+
+def check(state: dict, log: list[dict]) -> int:
+    """Count failed operations: a page with a wrong status, a filter form
+    that does not echo the request's own filters, or a repeated request
+    whose HTML differs; a report whose manifest differs from the recorded
+    one."""
+    with open(EXPECTED_REPORT) as f:
+        expected = json.load(f)
     failed = 0
     first_body: dict[str, str] = {}
     for entry in log:
         errors = []
         if entry.get("error"):
             errors.append(entry["error"])
-        elif entry["page"] is None:
+        elif entry["page"] == "report":
+            got = report_manifest(entry["dir"])
+            if got != expected:
+                errors.append(f"report manifest {got} != recorded {expected}")
+        elif entry["page"] == "refresh":
             if entry["status"] != 303:
                 errors.append(f"/refresh returned {entry['status']}")
         elif entry["status"] != 200:
@@ -165,93 +275,36 @@ def check(log: list[dict]) -> int:
     return failed
 
 
-def run(data_dir: str, out_dir: str, seed: int, seconds: float,
-        tracer_factory, t_setup: float) -> dict:
-    spark = start_session()
-    session_s = time.perf_counter() - t_setup
-    tracer = tracer_factory(spark, None)
-
-    if tracer is not None:
-        with tracer.span("pipeline.run_pipeline"):
-            views = run_pipeline(spark, data_dir)
-    else:
-        views = run_pipeline(spark, data_dir)
-    server, port = serve_dashboard(views, 0)
-    try:
-        warm = []
-        for page in PAGE_NAMES:
-            status, body = _get(port, f"/{page}")
-            if status != 200:
-                raise RuntimeError(f"set-up request /{page} returned {status}")
-            warm.append(body.decode())
-        setup_s = time.perf_counter() - t_setup
-        probe = SpeedProbe()
-        setup_s *= probe.step()  # one probe for the set-up: right after it
-        clientes, moras = filter_domains(warm)
-
-        log = []
-        rng = random.Random(seed)
-        probed_s = probe.spent_s
-        t0 = time.perf_counter()
-        while not log or time.perf_counter() - t0 < seconds:
-            for page, filters in request_cycle(rng, clientes, moras):
-                if page == "refresh":
-                    page, path = None, "/refresh"
-                else:
-                    path = _path(page, filters)
-                entry = {"page": page, "filters": filters, "path": path}
-                t = time.perf_counter()
-                try:
-                    if tracer is not None:
-                        with tracer.span("sinks.dashboard.request", page=page):
-                            entry["status"], entry["body"] = _get(port, path)
-                    else:
-                        entry["status"], entry["body"] = _get(port, path)
-                except OSError as e:
-                    entry["error"] = f"{path}: {e!r}"
-                entry["ms"] = (time.perf_counter() - t) * 1000.0
-                entry["speed"] = probe.step()
-                log.append(entry)
-        measured_s = time.perf_counter() - t0
-        probed_s = probe.spent_s - probed_s
-        mem = retained_mb(spark)
-    finally:
-        server.shutdown()
-        server.server_close()
-
-    pages = [e for e in log if e["page"] is not None and "error" not in e]
-    result = {"spark": spark, "attempted": len(log), "failed": check(log),
-              "setup_s": setup_s, "session_s": session_s, "retained_mb": mem,
-              "latencies_ms": [e["ms"] for e in pages],
-              "speeds": [e["speed"] for e in pages],
-              "measured_s": measured_s, "probed_s": probed_s,
-              "top_spans": {"sinks.dashboard.request"}}
-    if tracer is not None:
-        result["layers"] = _layers(tracer, pages)
-    return result
-
-
-def _layers(tracer, pages: list[dict]) -> dict[str, float]:
-    spans = [s for s in tracer.spans
-             if s["name"] == "sinks.dashboard.request" and s["page"] is not None]
-    layers = {
+def layers(tracer, log: list[dict]) -> dict[str, float]:
+    spans = [s for s in tracer.named("sinks.dashboard.request")
+             if s["page"] != "refresh"]
+    pages = [e for e in log if e["page"] in PAGE_NAMES and "error" not in e]
+    exports = [e for e in log if e["page"] == "report" and "error" not in e]
+    n = len(exports)
+    out = {
         "pipeline.run_pipeline_s": tracer.total("pipeline.run_pipeline"),
-        "pipeline.run_pipeline.spark_jobs":
-            tracer.total("pipeline.run_pipeline", "spark_jobs"),
-        "pipeline.run_pipeline.spark_stages":
-            tracer.total("pipeline.run_pipeline", "spark_stages"),
-        "sinks.dashboard.request.spark_jobs": sum(s["spark_jobs"] for s in spans),
-        "sinks.dashboard.request.spark_stages": sum(s["spark_stages"] for s in spans),
         "sinks.dashboard.jobs_per_request":
             sum(s["spark_jobs"] for s in spans) / len(spans),
         "sinks.dashboard.cache_hit_ratio":
             sum(s["spark_jobs"] == 0 for s in spans) / len(spans),
         "sinks.dashboard.html_bytes":
-            sum(len(e["body"]) for e in pages) / len(pages),
+            statistics.fmean(len(e["body"]) for e in pages),
+        "sinks.report.export_views_s":
+            tracer.total("sinks.report.export_views") / n,
+        "sinks.report.jobs_per_view":
+            tracer.total("sinks.report.export_views", "spark_jobs")
+            / (n * len(REPORT_VIEWS)),
+        "sinks.report.bytes_written": statistics.median(
+            sum(os.path.getsize(os.path.join(e["dir"], f))
+                for f in os.listdir(e["dir"]) if f != PDF_NAME)
+            for e in exports),
+        "sinks.xlsx.write_styled_workbook_s":
+            tracer.total("sinks.xlsx.write_styled_workbook") / n,
+        "sinks.pdf.export_pdf_report_s":
+            tracer.total("sinks.pdf.export_pdf_report") / n,
     }
     for page in PAGE_NAMES:
         ms = [(s["end"] - s["start"]) * 1000.0 for s in spans
               if s["page"] == page]
-        if ms:
-            layers[f"sinks.dashboard.page_{page}_p50_ms"] = statistics.median(ms)
-    return layers
+        out[f"sinks.dashboard.page_{page}_p50_ms"] = statistics.median(ms)
+    return out

@@ -2,12 +2,12 @@
 
 A span has a name, a start, an end and a parent.  Spans are kept in memory
 and written as JSON when the run ends.  Each span also records the Spark
-jobs and stages launched while it was open, read from
-``SparkContext.statusTracker()`` (works with ``spark.ui.enabled=false``),
-or none when there is no session.  Jobs are attributed by job group: the
-benchmark's main thread runs under ``JOB_GROUP``; jobs launched from the
-dashboard's request threads carry no group.  The time the tracer spends on
-its own bookkeeping is accumulated in ``overhead_s``.
+jobs launched while it was open, read from ``SparkContext.statusTracker()``
+(works with ``spark.ui.enabled=false``), and, once the traced phase is
+over, their stage count.
+No job group is set, so every job is counted under the null group; the
+benchmark runs one client at a time, so the jobs launched while a span is
+open are that span's, whichever thread launched them.
 """
 
 from __future__ import annotations
@@ -15,53 +15,46 @@ from __future__ import annotations
 import functools
 import json
 import time
-from contextlib import contextmanager
-
-JOB_GROUP = "perfbench"
+from contextlib import contextmanager, nullcontext
 
 
 class Tracer:
-    def __init__(self, spark, job_group: str | None) -> None:
-        self._tracker = spark.sparkContext.statusTracker() if spark else None
-        self._group = job_group
+    def __init__(self, spark) -> None:
+        self._tracker = spark.sparkContext.statusTracker()
         self.spans: list[dict] = []
         self._stack: list[int] = []
-        self.overhead_s = 0.0
-        if spark is not None and job_group is not None:
-            spark.sparkContext.setJobGroup(job_group, "benchmark trace")
 
     def _job_ids(self) -> set[int]:
-        if self._tracker is None:
-            return set()
-        return set(self._tracker.getJobIdsForGroup(self._group))
+        return set(self._tracker.getJobIdsForGroup(None))
 
-    def _stage_count(self, job_ids: set[int]) -> int:
-        n = 0
-        for j in job_ids:
-            info = self._tracker.getJobInfo(j)
-            if info is not None:
-                n += len(info.stageIds)
-        return n
+    def count_stages(self) -> None:
+        """Give every span its ``spark_jobs`` and ``spark_stages`` counts.
+        Called once the traced phase is over, so that looking up each job's
+        stages adds nothing to the spans' times."""
+        stages = {}
+        for s in self.spans:
+            for j in s["job_ids"]:
+                if j not in stages:
+                    info = self._tracker.getJobInfo(j)
+                    stages[j] = len(info.stageIds) if info is not None else 0
+            s["spark_jobs"] = len(s["job_ids"])
+            s["spark_stages"] = sum(stages[j] for j in s["job_ids"])
 
     @contextmanager
     def span(self, name: str, **attrs):
-        t_book = time.perf_counter()
         before = self._job_ids()
         record = {"id": len(self.spans), "name": name,
                   "parent": self._stack[-1] if self._stack else None, **attrs}
         self.spans.append(record)
         self._stack.append(record["id"])
         start = time.perf_counter()
-        self.overhead_s += start - t_book
         try:
             yield record
         finally:
             end = time.perf_counter()
             self._stack.pop()
-            jobs = self._job_ids() - before
-            record.update(start=start, end=end, spark_jobs=len(jobs),
-                          spark_stages=self._stage_count(jobs))
-            self.overhead_s += time.perf_counter() - end
+            record.update(start=start, end=end,
+                          job_ids=sorted(self._job_ids() - before))
 
     def wrap(self, name: str, fn):
         """Return ``fn`` with every call recorded as a span ``name``."""
@@ -71,23 +64,27 @@ class Tracer:
                 return fn(*args, **kwargs)
         return traced
 
-    def total(self, name: str, field: str = "dur") -> float:
+    def named(self, name: str, since: float = 0.0) -> list[dict]:
+        return [s for s in self.spans
+                if s["name"] == name and s["start"] >= since]
+
+    def total(self, name: str, field: str = "dur", since: float = 0.0) -> float:
+        """Summed duration (or ``field``) of the ``name`` spans opened at or
+        after ``since``."""
         return sum(s["end"] - s["start"] if field == "dur" else s[field]
-                   for s in self.spans if s["name"] == name)
+                   for s in self.named(name, since))
 
-    def self_time(self, name: str) -> float:
-        """Duration of the ``name`` spans minus the part their children
-        cover."""
-        ids = {s["id"] for s in self.spans if s["name"] == name}
-        child = sum(s["end"] - s["start"] for s in self.spans
-                    if s["parent"] in ids)
-        return self.total(name) - child
-
-    def top_level_s(self, names: set[str]) -> float:
-        """Summed duration of the parentless spans called one of ``names``."""
+    def top_level_s(self, since: float) -> float:
+        """Summed duration of the parentless spans opened at or after
+        ``since``."""
         return sum(s["end"] - s["start"] for s in self.spans
-                   if s["parent"] is None and s["name"] in names)
+                   if s["parent"] is None and s["start"] >= since)
 
     def write(self, path: str) -> None:
         with open(path, "w") as f:
-            json.dump({"overhead_s": self.overhead_s, "spans": self.spans}, f)
+            json.dump({"spans": self.spans}, f)
+
+
+def span(tracer: Tracer | None, name: str, **attrs):
+    """``tracer.span(name)``, or a no-op context when not tracing."""
+    return tracer.span(name, **attrs) if tracer else nullcontext()
