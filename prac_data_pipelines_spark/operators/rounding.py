@@ -25,22 +25,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-# A/B switch for tools/decimal_tax_probe.py ONLY: False swaps every money
-# aggregate back to the plain float sum so the determinism tax of the
-# decimal idiom can be measured on identical plans. Registered queries
-# always run with True (the probe restores it).
-USE_DECIMAL_MONEY_SUMS = True
-
-
 def money(col: Column) -> Column:
     """Money term for an order-insensitive aggregate sum (see caveat in
     the module docstring): cast to decimal(18,2) so partial-aggregation
     order cannot move the sum by an ulp. Central seam for the five
     decimal-sum sites (pricing_summary, parts_never_ordered,
     rich_inactive_customers, min_cost_supplier, order_vs_customer_avg)."""
-    if USE_DECIMAL_MONEY_SUMS:
-        return col.cast("decimal(18,2)")
-    return col
+    return col.cast("decimal(18,2)")
 
 
 def cents_sum(col: Column) -> Column:
@@ -51,14 +42,8 @@ def cents_sum(col: Column) -> Column:
     costs +81% on pricing_summary's 4-aggregate fact scan; cents ~0%).
     Input must be <=2-decimal structured (money, quantities). Returns the
     sum in CENTS as double — divide by 100 for units. Headroom: 1e10 rows
-    of 1e7-cent values stay under the bigint limit.
-
-    The False arm of USE_DECIMAL_MONEY_SUMS returns the plain float
-    sum * 100 (same units) so the A/B probe measures this idiom too."""
-    if USE_DECIMAL_MONEY_SUMS:
-        return F.sum(F.floor(col * 100 + F.lit(0.5)).cast("long")) \
-                .cast("double")
-    return F.sum(col) * 100
+    of 1e7-cent values stay under the bigint limit."""
+    return F.sum(F.floor(col * 100 + F.lit(0.5)).cast("long")).cast("double")
 
 
 def rn(col: Column, n: int) -> Column:

@@ -50,7 +50,7 @@ def _avg4(col: str):
     """Round-4 average through an exact cent-quantized long sum
     (``operators.rounding.cents_sum``): order-insensitive like the
     decimal idiom but without its +81%% codegen tax on this 4-aggregate
-    fact scan (tools/decimal_tax_probe.py)."""
+    fact scan (measured at sf0.1)."""
     from ..operators.rounding import cents_sum
 
     return (F.floor(cents_sum(F.col(col)) * 100 / F.count(F.col(col))

@@ -285,8 +285,7 @@ def q_events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         # trailing frame as a difference of two incremental prefix
         # frames (O(rows)) instead of Spark's sliding frame, which
         # re-aggregates the whole ~density x 24 h buffer per row
-        # (O(rows x frame) — quadratic in scale; r10 A/B + plan
-        # evidence in plans/r10/events_rolling_*.txt)
+        # (O(rows x frame) — quadratic in scale)
         rolled = sharded_trailing_count_avg(
             ev, ["event_type"], "ts", ROLLING_SECONDS,
             "n_24h", "media_24h", "value")

@@ -81,23 +81,30 @@ CALC_COLS_BY_SHEET = {"movimientos_totales_cxc": CALC_COLS_CXC}
 def export_views(views: dict[str, DataFrame], out_dir: str) -> list[str]:
     """Export a view dictionary: report-sized views into the reference's
     three styled workbooks (plus one catch-all workbook for views outside
-    the reference layout), oversized views as Parquet."""
+    the reference layout), oversized views as Parquet.
+
+    Each view is collected once, bounded at ``COLLECT_LIMIT + 1`` rows; a
+    view over the limit is written as Parquet instead of a sheet. Views
+    are collected one workbook at a time, so at most one workbook's frames
+    are in memory at once."""
     os.makedirs(out_dir, exist_ok=True)
     written: list[str] = []
-    small: dict[str, DataFrame] = {}
-    for name, df in views.items():
-        n = df.limit(COLLECT_LIMIT + 1).count()
-        if n > COLLECT_LIMIT:
-            path = os.path.join(out_dir, f"{name}.parquet")
-            df.write.mode("overwrite").parquet(path)
-            written.append(path)
-        else:
-            small[name] = df
 
-    assigned: set[str] = set()
+    def collect_sheets(names) -> list[tuple[str, object]]:
+        sheets = []
+        for name in names:
+            df = views[name]
+            pdf = df.limit(COLLECT_LIMIT + 1).toPandas()
+            if len(pdf) > COLLECT_LIMIT:
+                path = os.path.join(out_dir, f"{name}.parquet")
+                df.write.mode("overwrite").parquet(path)
+                written.append(path)
+            else:
+                sheets.append((name, pdf))
+        return sheets
+
     for fname, order in WORKBOOKS:
-        sheets = [(n, small[n].toPandas()) for n in order if n in small]
-        assigned.update(n for n, _ in sheets)
+        sheets = collect_sheets(n for n in order if n in views)
         if not sheets:
             continue
         path = os.path.join(out_dir, fname)
@@ -106,7 +113,8 @@ def export_views(views: dict[str, DataFrame], out_dir: str) -> list[str]:
                               calc_cols_by_sheet=CALC_COLS_BY_SHEET)
         written.append(path)
 
-    rest = [(n, small[n].toPandas()) for n in small if n not in assigned]
+    assigned = {n for _, order in WORKBOOKS for n in order}
+    rest = collect_sheets(n for n in views if n not in assigned)
     rest = [(n, pdf) for n, pdf in rest if not pdf.empty]
     if rest:
         path = os.path.join(out_dir, "99_vistas_cxc.xlsx")

@@ -30,7 +30,7 @@ _SELF = re.compile(r"\b(tests/[A-Za-z0-9_./-]*[A-Za-z0-9_]\.py)\b")
 def _source_files() -> list[Path]:
     roots = [REPO / "prac_data_pipelines_spark", REPO / "tools"]
     files = [p for r in roots for p in r.rglob("*.py")]
-    files += [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    files.append(REPO / "__spark_entry__.py")
     return [p for p in files if p.exists()]
 
 

@@ -130,3 +130,27 @@ def test_filter_form_preserves_state(dash_server):
     assert 'value="abc"' in body
     assert "checked" in body
     assert "dl_clientes" in body  # distinct-value suggestions (O6 widget)
+
+
+def test_concurrent_render_keeps_its_own_filters(views, monkeypatch):
+    """A render that starts while another is inside a view collect must not
+    change the filters the first one echoes (the HTTP server renders
+    requests on concurrent threads over one Dashboard)."""
+    from prac_data_pipelines_spark.sinks import dashboard
+
+    dash = dashboard.Dashboard(views)
+    real = dashboard.apply_view_filters
+    nested: list[str] = []
+
+    def interleaved(df, filters):
+        # interleave once: B renders with the real filter function
+        monkeypatch.setattr(dashboard, "apply_view_filters", real)
+        nested.append(dash.render("clientes", {"buscar": ["otro_b"]}))
+        return real(df, filters)
+
+    monkeypatch.setattr(dashboard, "apply_view_filters", interleaved)
+    page_a = dash.render("cartera", {"buscar": ["primero_a"]})
+    assert len(nested) == 1
+    assert 'value="primero_a"' in page_a
+    assert "otro_b" not in page_a
+    assert 'value="otro_b"' in nested[0]

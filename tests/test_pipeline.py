@@ -69,3 +69,33 @@ def test_pipeline_export(spark, sf_dir):
             root = ET.fromstring(zf.read("xl/workbook.xml"))
         sheets = [s.get("name") for s in root.findall(".//m:sheet", ns)]
         assert sheets == ["antiguedad_cartera_mxn", "kpis_resumen"]
+
+
+def test_export_writes_oversized_view_as_parquet(spark, monkeypatch):
+    import xml.etree.ElementTree as ET
+    import zipfile
+
+    from prac_data_pipelines_spark.sinks import report
+
+    monkeypatch.setattr(report, "COLLECT_LIMIT", 2)
+    schema = "NOMBRE string, VALOR double"
+    views = {  # 2 rows fit, 3 do not
+        "calidad_datos": spark.createDataFrame([("a", 1.0), ("b", 2.0)],
+                                               schema),
+        "kpis_resumen": spark.createDataFrame(
+            [("k", float(i)) for i in range(3)], schema),
+        "kpis_concentracion_mxn": spark.createDataFrame([("c", 1.0)], schema),
+    }
+    with tempfile.TemporaryDirectory() as d:
+        written = report.export_views(views, d)
+        names = sorted(os.path.basename(p) for p in written)
+        assert names == ["00_auditoria_cxc.xlsx", "02_analisis_cxc.xlsx",
+                         "kpis_resumen.parquet"]
+        # the Parquet copy is the whole view, not the bounded collect
+        full = spark.read.parquet(os.path.join(d, "kpis_resumen.parquet"))
+        assert full.count() == 3
+        ns = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
+        with zipfile.ZipFile(os.path.join(d, "02_analisis_cxc.xlsx")) as zf:
+            root = ET.fromstring(zf.read("xl/workbook.xml"))
+        sheets = [s.get("name") for s in root.findall(".//m:sheet", ns)]
+        assert sheets == ["kpis_concentracion_mxn"]

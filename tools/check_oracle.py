@@ -1,10 +1,8 @@
 """Local correctness harness — a mirror of the driver's CORRECTNESS gate.
 
-Usage: python tools/check_oracle.py [sf_dir] [query ...] [--head=N]
-                                    [--partitions=N]
+Usage: python tools/check_oracle.py [sf_dir] [query ...] [--partitions=N]
+                                    [--skip-recursive] [--conf=KEY=VALUE]
 
---head=N checks only the first N queries in priority order — the exact
-slice the driver's ~50-row gate budget will cover next round.
 --partitions=N overrides spark.sql.shuffle.partitions for a determinism
 sweep: every result must be identical under any physical parallelism
 (123/123 verified at N=7 vs the default 32).
@@ -21,19 +19,6 @@ oracles run fully at sf0.001/sf0.01 in every sweep. Skipping them at
 sf0.1 is a DuckDB-runtime concession, not a correctness gap.
 --skip-recursive applies exactly that exclusion (the canonical sf0.1
 sweep is: check_oracle.py /root/testdata/sf0.1 --skip-recursive).
-
-sf0.1 policy for the SLOW (non-recursive) oracles (VERDICT-r8 item #5):
-SLOW_ORACLE_QUERIES below have DuckDB oracles that are polynomial-heavy
-but terminating at sf0.1. The set is EMPTY as of r10:
-doc_strip_dup_spans was the last member (~380 s, cut to ~90-150 s in
-r9 by AS MATERIALIZED on the twice-referenced ws/wins CTEs, then to
-~0.3 s in r10 by replacing DuckDB's pathological min(STRUCT) aggregate
-with an order-preserving packed-BIGINT min — profiled at 483 s CPU for
-224k groups). POLICY stands for any future member: slow oracles STAY
-in the canonical sf0.1 sweep — the cost is accepted once per round for
-a full value check; they are never excluded from any sweep that gates
-a round. --skip-slow exists ONLY for interactive iteration (it prints
-what it skipped so a skipped sweep can't be mistaken for canonical).
 """
 
 from __future__ import annotations
@@ -59,16 +44,9 @@ RECURSIVE_ORACLE_QUERIES = frozenset({
     "multimodal_phash_weights",
 })
 
-# Non-recursive oracles that are slow (minutes, not hours) at sf0.1.
-# These remain IN the canonical sf0.1 sweep — see module docstring for
-# the accepted-cost policy; --skip-slow is for iteration only.
-SLOW_ORACLE_QUERIES = frozenset()  # empty since r10 (see policy above)
-
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    head = next((int(a.split("=", 1)[1]) for a in sys.argv[1:]
-                 if a.startswith("--head=")), None)
     parts = next((int(a.split("=", 1)[1]) for a in sys.argv[1:]
                   if a.startswith("--partitions=")), None)
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
@@ -90,24 +68,12 @@ def main() -> int:
             spark.conf.set(key, val)
     con = duck_connect(sf_dir)
     queries, oracles = all_queries(), all_oracles()
-    if head is not None:
-        queries = dict(list(queries.items())[:head])
     if "--skip-recursive" in sys.argv[1:]:
         skipped = sorted(RECURSIVE_ORACLE_QUERIES & queries.keys())
         queries = {n: f for n, f in queries.items()
                    if n not in RECURSIVE_ORACLE_QUERIES}
         print(f"skipping {len(skipped)} recursive-oracle queries "
               f"(sf0.1 policy, union-find-pinned): {', '.join(skipped)}")
-    if "--skip-slow" in sys.argv[1:]:
-        skipped = sorted(SLOW_ORACLE_QUERIES & queries.keys())
-        queries = {n: f for n, f in queries.items()
-                   if n not in SLOW_ORACLE_QUERIES}
-        if skipped:
-            print(f"skipping {len(skipped)} slow-oracle queries (ITERATION "
-                  f"ONLY — not a canonical sweep): {', '.join(skipped)}")
-        else:
-            print("--skip-slow: SLOW_ORACLE_QUERIES is empty — nothing "
-                  "skipped; this sweep is canonical-equivalent")
     failures = 0
     checked = 0
     sweep_t0 = time.time()

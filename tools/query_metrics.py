@@ -1,4 +1,4 @@
-"""Measured execution metrics per headline query: bytes scanned, shuffle
+"""Measured execution metrics per query: bytes scanned, shuffle
 write volume, and spill, from the SQL execution REST endpoint (the exact
 per-node metrics the Spark UI's SQL tab shows — the stage-level
 ``inputBytes`` counter is NOT wired for the vectorized parquet reader and
@@ -12,7 +12,7 @@ rows through a shuffle (the 100 TB red flag); the healthy pattern is
 scan >> shuffle (map-side partial aggregation, broadcast dims, pruned
 scans). Exceptions are documented per family in docs/METRICS.md.
 
-Usage: python tools/query_metrics.py [sf_dir] [out_md]
+Usage: python tools/query_metrics.py SF_DIR OUT_MD QUERY [QUERY ...]
 """
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ import urllib.request
 
 sys.path.insert(0, ".")
 
+from prac_data_pipelines_spark.queries import all_queries  # noqa: E402
 from prac_data_pipelines_spark.session import get_spark  # noqa: E402
 
 _SIZE = re.compile(r"([\d.]+)\s*(B|KiB|MiB|GiB|TiB)")
@@ -82,8 +83,13 @@ def _fmt(b: int) -> str:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_md = sys.argv[2] if len(sys.argv) > 2 else "docs/METRICS.md"
+    if len(sys.argv) < 4:
+        raise SystemExit(__doc__.rsplit("Usage: ", 1)[1])
+    sf_dir, out_md, *names = sys.argv[1:]
+    queries = all_queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
 
     # The engine session disables the UI; metrics need it. Build first so
     # get_spark's getOrCreate reuses this session (runtime confs are then
@@ -96,12 +102,6 @@ def main() -> None:
     spark = get_spark("query-metrics")
     spark.sparkContext.setLogLevel("ERROR")
     assert spark.sparkContext.uiWebUrl, "Spark UI must be enabled for metrics"
-
-    import bench
-    from prac_data_pipelines_spark.queries import all_queries
-
-    queries = all_queries()
-    names = [n for n in bench.HEADLINE if n in queries]
 
     rows = []
     _, last_id = _metrics_since(spark, -1)

@@ -117,11 +117,11 @@ def probe_llm(spark, sf_dir: str, k: int) -> None:
                  "multimodal_frame_dedup", "knn_mutual_pairs",
                  "corpus_dedup_funnel", "doc_clf_calibration",
                  "doc_eval_contamination"):
-        # same per-run cache hygiene as bench.py (r10): without it, the
-        # ~80-query battery accumulates every query's cached frames in
-        # one executor heap — at 128x the pile-up killed the session
-        # partway through — and any cross-query cache hit would
-        # under-report the later query's cost
+        # per-run cache hygiene: without it, the ~80-query battery
+        # accumulates every query's cached frames in one executor heap —
+        # at 128x the pile-up killed the session partway through — and
+        # any cross-query cache hit would under-report the later query's
+        # cost
         spark.catalog.clearCache()
         t0 = time.time()
         queries[name](spark, scratch).write.format("noop").mode("overwrite").save()
